@@ -145,12 +145,14 @@ def main() -> None:
     # r14 scaling block was flagged suspect_cpus_ignored because the
     # bench never showed the master it actually ran on
     sc = spark.sparkContext
+    # a non-numeric value (e.g. "auto") is echoed as set: raising here,
+    # after every query has run, would lose the whole report
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     env = {
         "master": sc.master,
         "default_parallelism": sc.defaultParallelism,
-        "shuffle_partitions": int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        ),
+        "shuffle_partitions": int(shuffle) if shuffle.isdigit()
+        else shuffle,
     }
     detail = {
         "metric": "inventory_total_runtime",

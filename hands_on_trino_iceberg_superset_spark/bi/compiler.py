@@ -1,55 +1,41 @@
-"""Superset form-data -> DataFrame compiler (SURVEY.md §2.6 M5).
+"""Superset form-data -> SQL compiler (SURVEY.md §2.6 M5).
 
-The reference stores each chart as a form_data JSON blob
-(``/root/reference/compose/superset/init_db.py:140-157``) and compiles
-it to SQL at view time. This module is that compiler, restated over
-DataFrames so Catalyst plans the query:
+The reference stores each chart as a form_data JSON blob (the
+reference's ``compose/superset/init_db.py:140-157``) and compiles it
+to SQL text at view time, which Superset posts to Trino. This module
+is that compiler, and it has ONE implementation of the form-data
+semantics: :func:`form_data_to_sql` / :func:`pivot_form_data_to_sql`
+emit the SQL text the wire server receives.
 
-- ``query_mode: "raw"``  -> ``select(all_columns)`` [+ order] + limit
+- ``query_mode: "raw"``  -> ``SELECT <all_columns>`` [+ order] + limit
   (init_db.py:148,151,154 -> ``SELECT <cols> FROM t LIMIT 100``)
-- ``query_mode: "aggregate"`` -> ``groupBy(groupby).agg(metrics)``
+- ``query_mode: "aggregate"`` -> ``GROUP BY groupby`` over the metrics
   with ``order_by`` / ``row_limit`` (the ``metrics: ["count"]`` +
-  ``order_by: [["count", False]]`` path, init_db.py:150,153)
+  ``order_by: [["count", False]]`` path, init_db.py:150,153), plus
+  time grains, time ranges, adhoc/HAVING filters, series limit, time
+  compare, contribution, percent metrics, rolling and resample.
 
 Metrics accept Superset's two shapes: the builtin string ``"count"``
 (-> COUNT(*)) and the adhoc dict ``{"aggregate": "SUM"|"AVG"|"MIN"|
 "MAX"|"COUNT"|"COUNT_DISTINCT", "column": <name>, "label": <alias>}``.
 
-Scale note: sort+limit compiles to TakeOrderedAndProject (top-K per
-partition then K-way merge on the driver — no global sort shuffle),
-and aggregation runs partial map-side; both survive a 1000-executor
-scale-up untouched.
+:func:`compile_form_data` / :func:`compile_pivot_form_data` are thin
+DataFrame adapters: they bind the frame to a temp view with a
+generated name, run the compiled text with ``spark.sql`` and drop the
+view again — the pattern of PySpark's own ``spark.sql("... {df}",
+df=df)``. The returned frame is already analyzed, so it outlives the
+view.
 """
 
 from __future__ import annotations
 
-from typing import Any, Mapping, Sequence
+import uuid
+from typing import Any, Callable, Mapping, Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
-_AGGS = {
-    "COUNT": F.count,
-    "SUM": F.sum,
-    "AVG": F.avg,
-    "MIN": F.min,
-    "MAX": F.max,
-    "COUNT_DISTINCT": F.countDistinct,
-}
-
-
-def _metric_column(metric: str | Mapping[str, Any]) -> Column:
-    """One Superset metric -> an aggregate Column with a stable alias."""
-    if isinstance(metric, str):
-        if metric != "count":
-            raise ValueError(f"unknown builtin metric: {metric}")
-        return F.count(F.lit(1)).alias("count")
-    agg = metric["aggregate"].upper()
-    if agg not in _AGGS:
-        raise ValueError(f"unknown aggregate: {agg}")
-    col = F.col(metric["column"])
-    label = metric.get("label") or f"{agg.lower()}_{metric['column']}"
-    return _AGGS[agg](col).alias(label)
+_AGGS = frozenset({"COUNT", "SUM", "AVG", "MIN", "MAX", "COUNT_DISTINCT"})
 
 
 def _metric_label(metric: str | Mapping[str, Any]) -> str:
@@ -61,8 +47,8 @@ def _metric_label(metric: str | Mapping[str, Any]) -> str:
 
 
 #: Superset time_grain_sqla (ISO-8601 duration) -> date_trunc unit —
-#: the same unit vocabulary Spark SQL and DuckDB/Trino share, so one
-#: mapping serves the Catalyst path and the SQL-text path
+#: the same unit vocabulary Spark SQL and DuckDB/Trino share, so the
+#: emitted text runs unchanged on the engine and the oracle
 _GRAINS = {
     "PT1S": "second",
     "PT1M": "minute",
@@ -102,15 +88,13 @@ def _parse_time_offset(off: str) -> tuple[int, str]:
 def _offset_suffix(off: str) -> str:
     """Column-label suffix for an offset series (Superset labels the
     joined columns ``<metric>__<offset>``; spaces are folded to
-    underscores so the label stays a plain SQL identifier on the
-    SQL-text path)."""
+    underscores so the label stays a plain SQL identifier)."""
     return str(off).strip().lower().replace(" ", "_")
 
 
 def _validate_compare_contribution(form_data: Mapping[str, Any],
                                    mode: str) -> None:
-    """Shared field validation for time_compare / contributionMode —
-    identical refusals on both compilation paths."""
+    """Field validation for time_compare / contributionMode."""
     offsets = form_data.get("time_compare") or []
     contrib = form_data.get("contributionMode")
     if not offsets and not contrib:
@@ -134,7 +118,7 @@ def _validate_compare_contribution(form_data: Mapping[str, Any],
             "time_compare with contributionMode is not supported")
     # time_compare WITH a time_range is the shifted-range fetch:
     # each offset arm reads [start-off, end-off) from the pre-range
-    # frame (r13; both paths), so no extra validation here
+    # frame (r13), so no extra validation here
     if contrib and contrib not in ("row", "series"):
         raise ValueError(f"unsupported contributionMode: {contrib!r}")
     for off in offsets:
@@ -174,8 +158,7 @@ def _parse_resample_rule(rule: str) -> tuple[int, str, int]:
 
 def _validate_resample(form_data: Mapping[str, Any],
                        mode: str) -> tuple[int, str, str] | None:
-    """Shared resample validation — identical refusals on both
-    compilation paths. Returns (step, unit, method) or None."""
+    """Resample validation. Returns (step, unit, method) or None."""
     rule = form_data.get("resample_rule")
     if not rule:
         if form_data.get("resample_method"):
@@ -511,13 +494,12 @@ def _normalized_time_range(form_data: Mapping[str, Any]) -> str:
         anchor = _range_anchor(form_data)
         since = _minus_units(anchor, int(m.group(1)), m.group(2))
         return f"{_fmt_bound(since)} : {_fmt_bound(anchor)}"
-    return rng  # not relative; the per-path ISO validation decides
+    return rng  # not relative; the ISO validation decides
 
 
-#: full ISO shape for an explicit bound — shared by BOTH compilation
-#: paths, so a phrase neither path models gets the SAME loud refusal
-#: (and, on the SQL path, a quote smuggled into the form_data blob
-#: can't escape the TIMESTAMP literal)
+#: full ISO shape for an explicit bound — a phrase the compiler does
+#: not model gets a loud refusal, and a quote smuggled into the
+#: form_data blob can't escape the TIMESTAMP literal
 _ISO_BOUND_RE = None
 
 
@@ -537,10 +519,9 @@ def _resolved_time_bounds(
     shift: tuple[int, str] | None = None,
 ) -> tuple[str, str] | None:
     """``time_range`` -> validated (start, end) ISO bound strings
-    (either possibly empty), or None for no filtering. One resolver
-    for both compilation paths — relative phrases land here already
-    normalized, so a bound failing the ISO shape is grammar the
-    compiler does not model. ``shift=(n, unit)`` moves both bounds
+    (either possibly empty), or None for no filtering. Relative
+    phrases land here already normalized, so a bound failing the ISO
+    shape is grammar the compiler does not model. ``shift=(n, unit)`` moves both bounds
     BACK by the offset (time_compare's shifted-range fetch: the
     offset arm reads [start-off, end-off) so its re-labelled buckets
     cover the whole main window)."""
@@ -562,7 +543,7 @@ def _resolved_time_bounds(
             # Superset's ADVANCED tab: a bound may be a grammar
             # expression (DATEADD/DATETRUNC/LASTDAY/today/now) —
             # resolved against the anchor into an ISO string, so the
-            # SQL path's TIMESTAMP literal stays injection-proof
+            # TIMESTAMP literal stays injection-proof
             bound = _fmt_bound(
                 _parse_range_expr(bound, _range_anchor(form_data))
             )
@@ -597,37 +578,6 @@ def _range_endpoints(form_data: Mapping[str, Any]) -> tuple[str, str]:
             "[start, end] pair of 'inclusive'/'exclusive'"
         )
     return eps[0], eps[1]
-
-
-def _apply_time_range(
-    df: DataFrame, form_data: Mapping[str, Any],
-    shift: tuple[int, str] | None = None,
-) -> DataFrame:
-    """``time_range`` filter hook. ``"No filter"`` (the reference's
-    only value, init_db.py:147) is a no-op; ``"<start> : <end>"``
-    ISO bounds and Superset's relative phrases (resolved against the
-    injectable anchor) filter ``granularity_sqla`` with
-    ``time_range_endpoints`` inclusivity (default [inclusive,
-    exclusive]). ``shift`` selects a time_compare offset arm's
-    shifted window."""
-    time_col = form_data.get("granularity_sqla")
-    if not time_col:
-        return df
-    bounds = _resolved_time_bounds(form_data, shift=shift)
-    if bounds is None:
-        return df
-    start, end = bounds
-    start_ep, end_ep = _range_endpoints(form_data)
-    col = F.col(time_col)
-    if start:
-        lo = F.lit(start).cast("timestamp_ntz")
-        df = df.filter(col >= lo if start_ep == "inclusive"
-                       else col > lo)
-    if end:
-        hi = F.lit(end).cast("timestamp_ntz")
-        df = df.filter(col < hi if end_ep == "exclusive"
-                       else col <= hi)
-    return df
 
 
 #: Superset SIMPLE adhoc-filter operators -> (arity kind)
@@ -745,7 +695,7 @@ def _adhoc_filters(form_data: Mapping[str, Any]) -> list[dict]:
         cmp_ = f.get("comparator")
         # arity validation: a malformed stored blob must fail loudly,
         # not filter wrong — a scalar string on IN would otherwise be
-        # iterated character-by-character on BOTH paths
+        # iterated character-by-character
         if kind == "list":
             if not isinstance(cmp_, (list, tuple)) or not cmp_:
                 raise ValueError(
@@ -762,50 +712,12 @@ def _adhoc_filters(form_data: Mapping[str, Any]) -> list[dict]:
     return out
 
 
-def _filter_pred(col: Column, op: str, cmp_) -> Column:
-    if op == "==":
-        return col == F.lit(cmp_)
-    if op == "!=":
-        return col != F.lit(cmp_)
-    if op == ">":
-        return col > F.lit(cmp_)
-    if op == ">=":
-        return col >= F.lit(cmp_)
-    if op == "<":
-        return col < F.lit(cmp_)
-    if op == "<=":
-        return col <= F.lit(cmp_)
-    if op == "IN":
-        return col.isin(list(cmp_))
-    if op == "NOT IN":
-        return ~col.isin(list(cmp_))
-    if op == "LIKE":
-        return col.like(str(cmp_))
-    if op == "IS NULL":
-        return col.isNull()
-    return col.isNotNull()  # IS NOT NULL
-
-
-def _apply_adhoc_filters(
-    df: DataFrame, form_data: Mapping[str, Any],
-    clause: str = "WHERE",
-) -> DataFrame:
-    for f in _adhoc_filters(form_data):
-        if f["clause"] != clause:
-            continue
-        df = df.filter(
-            _filter_pred(F.col(f["subject"]), f["operator"],
-                         f["comparator"])
-        )
-    return df
-
-
 def _sql_literal(v) -> str:
     """One filter comparator as SQL text: numbers pass through,
     booleans lower, strings single-quoted with quote doubling — the
     stored blob can never break out of the literal."""
     if v is None:
-        return "NULL"  # same no-rows semantics as the Catalyst lit
+        return "NULL"  # a NULL comparison matches no rows
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
     if isinstance(v, (int, float)):
@@ -843,334 +755,6 @@ def _adhoc_filter_sql(
         else:
             conds.append(f"{subj} {op} {_sql_literal(cmp_)}")
     return conds
-
-
-def compile_form_data(
-    df: DataFrame, form_data: Mapping[str, Any]
-) -> DataFrame:
-    """Compile one chart's form_data against its dataset DataFrame."""
-    form_data = merge_extra_form_data(form_data)
-
-    def _ob_label(c) -> str:
-        # order_by entries carry either a plain column name or an
-        # adhoc-metric dict; ONE resolution rule for every consumer
-        # (pct selection, rolling selection, final ordering)
-        return _metric_label(c) if not isinstance(c, str) else c
-
-    # adhoc filters first, time range second: the pre-range frame
-    # (df_pre) is what a time_compare offset arm re-reads with its
-    # SHIFTED window — it must carry every non-time filter
-    df_pre = _apply_adhoc_filters(df, form_data)
-    df = _apply_time_range(df_pre, form_data)
-    mode = form_data.get("query_mode", "raw")
-    row_limit = form_data.get("row_limit")
-    order_by: Sequence[Sequence[Any]] = form_data.get("order_by") or []
-
-    if any(f["clause"] == "HAVING"
-           for f in _adhoc_filters(form_data)) and mode != "aggregate":
-        raise ValueError("HAVING filters require aggregate mode")
-    if form_data.get("rolling_type") and mode != "aggregate":
-        raise ValueError("rolling_type requires aggregate mode")
-    if form_data.get("series_limit") and mode != "aggregate":
-        raise ValueError("series_limit requires aggregate mode")
-    _validate_compare_contribution(form_data, mode)
-    _validate_resample(form_data, mode)
-    if mode == "raw":
-        cols = form_data.get("all_columns") or df.columns
-        out = df.select(*cols)
-        # Superset ignores metric-shaped order_by in raw mode (raw
-        # ordering comes from order_by_cols); the reference's raw
-        # blob carries order_by [["count", false]] with no such
-        # column — applying it would crash on UNRESOLVED_COLUMN
-        order_by = [
-            ob for ob in order_by
-            if isinstance(ob[0], str) and ob[0] in out.columns
-        ]
-    elif mode == "aggregate":
-        groupby = list(form_data.get("groupby") or [])
-        unit = _grain_unit(form_data)
-        if unit:
-            # the truncated time dimension leads the group keys under
-            # Superset's reserved label — a timeseries chart is just
-            # an aggregate chart grouped by date_trunc(grain, ts)
-            df = df.withColumn(
-                TIME_LABEL,
-                F.date_trunc(unit,
-                             F.col(form_data["granularity_sqla"])),
-            )
-            groupby = [TIME_LABEL, *groupby]
-        metrics = form_data.get("metrics") or ["count"]
-        aggs = [_metric_column(m) for m in metrics]
-        out = (
-            df.groupBy(*groupby).agg(*aggs)
-            if groupby
-            else df.agg(*aggs)
-        )
-        series_limit = form_data.get("series_limit")
-        if series_limit:
-            # Superset's timeseries series cap: an independent
-            # top-N-groups subquery over the SAME filtered frame
-            # (whole time range), then the main result keeps only
-            # those series — every time bucket of a surviving
-            # series, never a row_limit on buckets. Exactly
-            # Superset's two-query shape.
-            series_keys = [k for k in groupby if k != TIME_LABEL]
-            if not series_keys:
-                raise ValueError(
-                    "series_limit requires non-time groupby columns")
-            slm = form_data.get("series_limit_metric") or metrics[0]
-            lab = _metric_label(slm)
-            top = (
-                df.groupBy(*series_keys)
-                .agg(_metric_column(slm))
-                .orderBy(F.desc(lab),
-                         *[F.asc(k) for k in series_keys])
-                .limit(int(series_limit))
-                .select(*series_keys)
-            )
-            out = out.join(F.broadcast(top), series_keys, "left_semi")
-        # HAVING filters: post-aggregation predicates on group keys
-        # or metric labels (Superset's metric-filter clause) — they
-        # run BEFORE ordering/limit/percent, i.e. they shape which
-        # groups exist at all
-        having = [f for f in _adhoc_filters(form_data)
-                  if f["clause"] == "HAVING"]
-        if having:
-            allowed = set(groupby) | {_metric_label(m)
-                                      for m in metrics}
-            for f in having:
-                if f["subject"] not in allowed:
-                    raise ValueError(
-                        f"HAVING filter subject {f['subject']!r} is "
-                        "not an emitted group key or metric label")
-            out = _apply_adhoc_filters(out, form_data,
-                                       clause="HAVING")
-        offsets = form_data.get("time_compare") or []
-        if offsets:
-            # Superset's time-comparison series: the SAME aggregate
-            # re-run with every timestamp shifted FORWARD by the
-            # offset, left-joined back on (__timestamp, series keys)
-            # — the value of a bucket one offset ago lands beside
-            # the current bucket as <metric>__<offset>. With an
-            # explicit/relative time_range, each offset arm reads
-            # the SHIFTED window [start-off, end-off) from the
-            # pre-range frame (Superset's shifted-range fetch) so
-            # every main bucket — including the window's first —
-            # finds its one-offset-ago value. Both sides aggregate
-            # on identical keys, so the join is bucket-count-sized
-            # (chart-scale) however big the fact table is; at 100 TB
-            # both aggregates are one linear pass each.
-            labels = [_metric_label(m) for m in metrics]
-            for off in offsets:
-                n, u = _parse_time_offset(off)
-                sfx = _offset_suffix(off)
-                arm = _apply_time_range(
-                    df_pre, form_data, shift=(n, u)
-                ).withColumn(
-                    TIME_LABEL,
-                    F.date_trunc(unit,
-                                 F.col(form_data["granularity_sqla"])),
-                )
-                shifted = (
-                    arm.withColumn(
-                        TIME_LABEL,
-                        F.timestamp_add(u, F.lit(n),
-                                        F.col(TIME_LABEL)))
-                    .groupBy(*groupby)
-                    .agg(*[_metric_column(m) for m in metrics])
-                    .select(
-                        *groupby,
-                        *[F.col(lab).alias(f"{lab}__{sfx}")
-                          for lab in labels],
-                    )
-                )
-                out = out.join(shifted, groupby, "left")
-        contrib = form_data.get("contributionMode")
-        if contrib:
-            # contribution mode replaces each metric value by its
-            # share: "row" = of the time bucket across series,
-            # "series" = of the series across time. The window runs
-            # over the already-aggregated chart-sized result.
-            # Integer metrics (count) divide exactly in f64, so both
-            # compilation paths and the SQL oracle agree bit-for-bit.
-            from pyspark.sql import Window
-
-            skeys = [k for k in groupby if k != TIME_LABEL]
-            w = (Window.partitionBy(TIME_LABEL) if contrib == "row"
-                 else Window.partitionBy(*skeys))
-            for m in metrics:
-                lab = _metric_label(m)
-                out = out.withColumn(
-                    lab,
-                    F.col(lab).cast("double")
-                    / F.sum(lab).over(w).cast("double"),
-                )
-        pct = form_data.get("percent_metrics") or []
-        pct_labels = [f"pct_{_metric_label(m)}" for m in pct]
-        for m in pct:
-            if _metric_label(m) not in {_metric_label(x)
-                                        for x in metrics}:
-                raise ValueError(
-                    f"percent metric {_metric_label(m)!r} must "
-                    "also appear in metrics")
-        # mirror form_data_to_sql: order_by entries naming nothing
-        # emitted are dropped, keeping the two compilation paths'
-        # results identical (applying them here would crash on
-        # UNRESOLVED_COLUMN where the SQL path silently filters)
-        emitted = (set(groupby) | {_metric_label(m) for m in metrics}
-                   | set(pct_labels)
-                   | {f"{_metric_label(m)}__{_offset_suffix(off)}"
-                      for m in metrics
-                      for off in form_data.get("time_compare") or []})
-        order_by = [
-            ob for ob in order_by
-            if (_metric_label(ob[0]) if not isinstance(ob[0], str)
-                else ob[0]) in emitted
-        ]
-        if pct:
-            # Superset's table-chart semantics: percents are computed
-            # over the FETCHED result — order + row_limit select the
-            # rows FIRST, then each listed metric divides by the sum
-            # across those rows (shares of a truncated chart sum to
-            # 1, matching what Superset displays). The denominator
-            # window runs over the already-aggregated, row-limited
-            # result — chart-sized by construction, never the fact
-            # table — and the aggregation executes once.
-            from pyspark.sql import Window
-
-            sel = [ob for ob in order_by
-                   if _ob_label(ob[0]) not in pct_labels]
-            if sel:
-                out = out.orderBy(*[
-                    F.col(_ob_label(c)) if asc else F.desc(_ob_label(c))
-                    for c, asc in sel
-                ])
-            if row_limit:
-                out = out.limit(int(row_limit))
-                row_limit = None  # selection done; don't re-limit
-            w = Window.partitionBy()
-            for m in pct:
-                lab = _metric_label(m)
-                out = out.withColumn(
-                    f"pct_{lab}",
-                    F.col(lab).cast("double")
-                    / F.sum(F.col(lab).cast("double")).over(w),
-                )
-        rolling = form_data.get("rolling_type")
-        if rolling:
-            # Superset applies rolling as pandas post-processing on
-            # the FETCHED timeseries frame; the compiled twin is a
-            # window over the ordered+limited aggregate (selection
-            # first, same shape as percent_metrics above). Each
-            # metric label is REPLACED by its rolled value, as the
-            # chart displays it.
-            if pct:
-                raise ValueError(
-                    "rolling_type with percent_metrics is not "
-                    "supported")
-            if not unit:
-                raise ValueError(
-                    "rolling_type requires granularity_sqla + "
-                    "time_grain_sqla (a timeseries chart)")
-            if rolling not in ("mean", "sum", "cumsum"):
-                # std intentionally unsupported: float accumulation
-                # order differs across engines — an honest refusal
-                # beats a hash-flaky chart
-                raise ValueError(
-                    f"unsupported rolling_type: {rolling!r}")
-            periods = form_data.get("rolling_periods")
-            periods = 1 if periods is None else int(periods)
-            if periods <= 0:
-                raise ValueError("rolling_periods must be positive")
-            mp = form_data.get("min_periods")
-            mp = (1 if rolling == "cumsum" else periods) \
-                if mp is None else int(mp)
-            from pyspark.sql import Window
-
-            if order_by:
-                out = out.orderBy(*[
-                    F.col(_ob_label(c)) if asc else F.desc(_ob_label(c))
-                    for c, asc in order_by
-                ])
-            if row_limit:
-                out = out.limit(int(row_limit))
-                row_limit = None
-            keys = [k for k in groupby if k != TIME_LABEL]
-            w = Window.partitionBy(*keys).orderBy(TIME_LABEL)
-            w = (w.rowsBetween(Window.unboundedPreceding, 0)
-                 if rolling == "cumsum"
-                 else w.rowsBetween(-(periods - 1), 0))
-            for m in metrics:
-                lab = _metric_label(m)
-                cnt = F.count(F.col(lab)).over(w)
-                val = F.sum(F.col(lab)).over(w).cast("double")
-                if rolling == "mean":
-                    val = val / cnt
-                out = out.withColumn(
-                    lab,
-                    F.when(cnt >= mp, val.cast("double")),
-                )
-        resample = _validate_resample(form_data, mode)
-        if resample:
-            # Superset's resample post-processing (pandas reindex at
-            # the rule frequency per series + fill), compiled as a
-            # DATE SPINE: the full bucket grid from min to max
-            # timestamp at the rule step, cross-joined with the
-            # distinct series keys, left-joined onto the aggregate,
-            # gaps filled per method. Every stage runs over the
-            # already-aggregated chart-sized result — the spine is
-            # bounded by the chart's time span, never the fact table
-            # (the events_daily_gapfill machinery as a form_data
-            # field).
-            from pyspark.sql import Window
-
-            step, u, method = resample
-            keys = [k for k in groupby if k != TIME_LABEL]
-            bounds = out.agg(
-                F.min(TIME_LABEL).alias("t0"),
-                F.max(TIME_LABEL).alias("t1"),
-            )
-            spine = bounds.select(
-                F.explode(
-                    F.sequence(
-                        "t0", "t1",
-                        F.expr(f"INTERVAL '{step}' {u}"),
-                    )
-                ).alias(TIME_LABEL)
-            )
-            grid = (spine.crossJoin(out.select(*keys).distinct())
-                    if keys else spine)
-            out = grid.join(out, [TIME_LABEL, *keys], "left")
-            labels = [_metric_label(m) for m in metrics]
-            if method == "zerofill":
-                for lab in labels:
-                    out = out.withColumn(
-                        lab, F.coalesce(F.col(lab), F.lit(0)))
-            elif method == "ffill":
-                w = (Window.partitionBy(*keys).orderBy(TIME_LABEL)
-                     .rowsBetween(Window.unboundedPreceding, 0))
-                for lab in labels:
-                    out = out.withColumn(
-                        lab, F.last(lab, ignorenulls=True).over(w))
-            elif method == "bfill":
-                w = (Window.partitionBy(*keys).orderBy(TIME_LABEL)
-                     .rowsBetween(0, Window.unboundedFollowing))
-                for lab in labels:
-                    out = out.withColumn(
-                        lab, F.first(lab, ignorenulls=True).over(w))
-            # asfreq: gaps stay NULL
-    else:
-        raise ValueError(f"unknown query_mode: {mode}")
-
-    if order_by:
-        sort_cols = [
-            F.col(_ob_label(c)) if asc else F.desc(_ob_label(c))
-            for c, asc in order_by
-        ]
-        out = out.orderBy(*sort_cols)
-    if row_limit:
-        out = out.limit(int(row_limit))
-    return out
 
 
 def _sql_ident(name: str) -> str:
@@ -1212,7 +796,7 @@ def _time_range_sql_conds(
     form_data: Mapping[str, Any],
     shift: tuple[int, str] | None = None,
 ) -> list[str]:
-    """``time_range`` -> WHERE conditions for the SQL-text paths.
+    """``time_range`` -> WHERE conditions.
     ``_resolved_time_bounds`` resolves relative phrases against the
     injectable anchor AND validates the full ISO shape, so a quote
     smuggled into the form_data blob can't escape the TIMESTAMP
@@ -1239,14 +823,13 @@ def _time_range_sql_conds(
 
 
 def form_data_to_sql(table: str, form_data: Mapping[str, Any]) -> str:
-    """The same chart compilation targeting SQL TEXT — what the
+    """One chart's form_data -> SQL text over ``table`` — what the
     reference's Superset actually sends its Trino database at view
     time (init_db.py stores the form_data blob; Superset compiles it
     through SQLAlchemy and POSTs the SQL over the Trino REST
-    protocol). ``compile_form_data`` is the Catalyst-native path;
-    this one exists so the wire query (queries/wire.py
-    bi_chart_over_http) can close the full loop: form_data -> SQL ->
-    HTTP -> result grid."""
+    protocol). The wire query (queries/wire.py bi_chart_over_http)
+    closes the full loop: form_data -> SQL -> HTTP -> result grid;
+    :func:`compile_form_data` runs the same text over a DataFrame."""
     form_data = merge_extra_form_data(form_data)
     mode = form_data.get("query_mode", "raw")
     if any(f["clause"] == "HAVING"
@@ -1270,13 +853,13 @@ def form_data_to_sql(table: str, form_data: Mapping[str, Any]) -> str:
         select = ", ".join(_sql_ident(c) for c in cols) if cols else "*"
         group = ""
         # Superset ignores metric-shaped order_by in raw mode (the
-        # reference's raw blob carries order_by [["count", false]]);
-        # the Catalyst twin filters against the dataset's columns,
-        # but SQL-text compilation has no schema — so only entries
+        # reference's raw blob carries order_by [["count", false]]).
+        # SQL-text compilation has no schema — so only entries
         # provably in all_columns survive, and with no all_columns
         # every entry is dropped rather than emitted unverified
         # (SELECT * ... ORDER BY count would fail at execution on
-        # the documented reference input)
+        # the documented reference input); compile_form_data fills
+        # all_columns from the frame's schema
         out_cols = set(cols or [])
         order_by = [
             ob for ob in order_by
@@ -1301,9 +884,11 @@ def form_data_to_sql(table: str, form_data: Mapping[str, Any]) -> str:
                 raise ValueError(
                     f"percent metric {lab!r} must also appear in "
                     "metrics")
-            # computed over the FETCHED result (see the Catalyst
-            # path): the window runs in an OUTER select around the
-            # ordered+limited inner query, over chart-sized rows
+            # Superset's table-chart semantics: percents are
+            # computed over the FETCHED result (order + row_limit
+            # select the rows first, so shares of a truncated chart
+            # sum to 1): the window runs in an OUTER select around
+            # the ordered+limited inner query, over chart-sized rows
             pct_sqls.append(
                 f"CAST({lab} AS DOUBLE) / CAST(sum({lab}) OVER () "
                 f"AS DOUBLE) AS pct_{lab}"
@@ -1361,9 +946,10 @@ def form_data_to_sql(table: str, form_data: Mapping[str, Any]) -> str:
 
     series_limit = form_data.get("series_limit")
     if mode == "aggregate" and series_limit:
-        # mirror of the Catalyst path: an independent top-N-groups
-        # subquery over the same filtered frame keeps only the
-        # winning series — every time bucket of a surviving series
+        # Superset's timeseries series cap: an independent top-N-
+        # groups subquery over the same filtered rows (whole time
+        # range) keeps only the winning series — every time bucket
+        # of a surviving series, never a row_limit on buckets
         skeys = [_sql_ident(c) for c in form_data.get("groupby") or []]
         if not skeys:
             raise ValueError(
@@ -1385,9 +971,11 @@ def form_data_to_sql(table: str, form_data: Mapping[str, Any]) -> str:
     sql = f"SELECT {select} FROM {_sql_ident(table)}{where}{group}"
     offsets_fd = form_data.get("time_compare") or []
     if mode == "aggregate" and offsets_fd:
-        # mirror of the Catalyst path: each offset is the same
+        # Superset's time-comparison series: each offset is the same
         # aggregate with every bucket timestamp shifted FORWARD,
-        # left-joined back on (__timestamp, series keys). The offset
+        # left-joined back on (__timestamp, series keys), so the
+        # value of a bucket one offset ago lands beside the current
+        # bucket as <metric>__<offset>. The offset
         # subquery carries the adhoc WHERE plus its own SHIFTED time
         # window (the shifted-range fetch) but never the HAVING or
         # the series_limit pred (the main side alone decides which
@@ -1426,9 +1014,10 @@ def form_data_to_sql(table: str, form_data: Mapping[str, Any]) -> str:
         )
     contrib_fd = form_data.get("contributionMode")
     if mode == "aggregate" and contrib_fd:
-        # mirror of the Catalyst path: metric values replaced by
-        # their share of the time bucket (row) or of the series
-        # (series), over the chart-sized aggregate
+        # contribution mode: metric values replaced by their share
+        # of the time bucket (row) or of the series (series), over
+        # the chart-sized aggregate; count metrics divide exactly in
+        # f64, so the engine and the SQL oracle agree bit-for-bit
         gb_idents = [_sql_ident(c)
                      for c in form_data.get("groupby") or []]
         if contrib_fd == "row":
@@ -1449,8 +1038,8 @@ def form_data_to_sql(table: str, form_data: Mapping[str, Any]) -> str:
     row_limit = form_data.get("row_limit")
     rolling = form_data.get("rolling_type")
     if mode == "aggregate" and rolling:
-        # mirror of the Catalyst path: selection (order+limit)
-        # first, then each metric label replaced by its rolled value
+        # selection (order+limit) first, then each metric label
+        # replaced by its rolled value
         # in an outer select — the pandas-post-processing shape
         # Superset applies to the fetched timeseries frame
         if pct_sqls:
@@ -1501,8 +1090,7 @@ def form_data_to_sql(table: str, form_data: Mapping[str, Any]) -> str:
         )
     if mode == "aggregate" and pct_sqls:
         # selection first (order + limit pick the fetched rows),
-        # then the percent window over that bounded result — the
-        # Catalyst path builds the identical shape
+        # then the percent window over that bounded result
         pct_label_set = {f"pct_{_metric_label(m)}" for m in pct}
         sel = [ob for ob in order_by
                if (_metric_label(ob[0]) if not isinstance(ob[0], str)
@@ -1514,9 +1102,11 @@ def form_data_to_sql(table: str, form_data: Mapping[str, Any]) -> str:
                + order_clause(order_by))
         return sql
     if mode == "aggregate" and resample:
-        # mirror of the Catalyst path: date spine from min to max at
-        # the rule step, cross-joined with the distinct series keys,
-        # left-joined onto the aggregate, gaps filled per method.
+        # Superset's resample post-processing (pandas reindex at the
+        # rule frequency per series + fill) as a date spine from min
+        # to max at the rule step, cross-joined with the distinct
+        # series keys, left-joined onto the aggregate, gaps filled
+        # per method.
         # The inner aggregate text repeats (bounds / series / data) —
         # each execution is chart-sized.
         step, u, method = resample
@@ -1569,15 +1159,50 @@ def form_data_to_sql(table: str, form_data: Mapping[str, Any]) -> str:
     return sql
 
 
+def _on_temp_view(
+    df: DataFrame, compile_sql: Callable[[str], str],
+) -> DataFrame:
+    """Run the SQL text ``compile_sql(view)`` over ``df`` bound to a
+    temp view with a generated name, dropping the view before
+    returning. ``spark.sql`` analyzes its plan eagerly, so the
+    returned frame no longer needs the view."""
+    spark = df.sparkSession
+    view = f"_form_data_{uuid.uuid4().hex}"
+    df.createTempView(view)
+    try:
+        return spark.sql(compile_sql(view))
+    finally:
+        spark.catalog.dropTempView(view)
+
+
+def compile_form_data(
+    df: DataFrame, form_data: Mapping[str, Any]
+) -> DataFrame:
+    """Compile one chart's form_data against its dataset DataFrame:
+    :func:`form_data_to_sql` run over ``df``. A raw chart without
+    ``all_columns`` selects every column of ``df`` by name, so an
+    ``order_by`` on a real column still applies."""
+    if form_data.get("query_mode", "raw") == "raw" \
+            and not form_data.get("all_columns"):
+        form_data = {**form_data, "all_columns": df.columns}
+    return _on_temp_view(df, lambda view: form_data_to_sql(view, form_data))
+
+
 # ------------------------------------------------------- pivot charts
+
+
+def _where_conds(form_data: Mapping[str, Any]) -> list[str]:
+    """A pivot chart's WHERE conditions: time range, then adhoc
+    filters."""
+    return _time_range_sql_conds(form_data) + _adhoc_filter_sql(form_data)
 
 
 def _pivot_label(value, metric) -> str:
     """Output column label for one (column value, metric) pivot cell:
     ``<value>__<metric label>`` with non-identifier characters folded
-    to underscores, so the label survives the SQL-text path's
-    identifier rules. Superset's pandas pivot uses a MultiIndex; a
-    flat relational result needs flat names."""
+    to underscores, so the label survives the SQL identifier rules.
+    Superset's pandas pivot uses a MultiIndex; a flat relational
+    result needs flat names."""
     import re
 
     v = re.sub(r"[^A-Za-z0-9_]", "_", str(value))
@@ -1647,64 +1272,43 @@ def _pivot_values(df: DataFrame, col_key: str) -> list:
     return vals
 
 
-def _pivot_cell_column(metric, col_key: str, value) -> Column:
-    """One pivot cell as a conditional aggregate Column — the
-    single-aggregate formulation (no per-value scan, no pivot
-    operator): every cell is computed in ONE pass over the frame,
-    map-side partial aggregation included, which is also exactly the
-    SQL-text formulation so both paths share semantics."""
-    cond = F.col(col_key) == F.lit(value)
-    if isinstance(metric, str):
-        if metric != "count":
-            raise ValueError(f"unknown builtin metric: {metric}")
-        return F.count(F.when(cond, F.lit(1)))
-    agg = metric["aggregate"].upper()
-    if agg not in _AGGS:
-        raise ValueError(f"unknown aggregate: {agg}")
-    inner = F.when(cond, F.col(metric["column"]))
-    return _AGGS[agg](inner)
-
-
 def compile_pivot_form_data(
     df: DataFrame, form_data: Mapping[str, Any],
     values: Sequence[Any] | None = None,
     row_total: bool = False,
 ) -> DataFrame:
-    """Compile a Superset pivot_table_v2 chart: ``groupbyRows`` stay
-    group keys, the single ``groupbyColumns`` key fans out into one
-    output column per (value, metric) via conditional aggregation.
-    Superset itself pivots the fetched frame in pandas; compiling the
-    pivot INTO the aggregate pushes it to the engine — one shuffle on
-    the row keys, cells as FILTER-style aggregates, no second pass.
-    ``values`` pins the output schema explicitly (else derived from
-    the data, sorted); rows whose pivot key is NULL contribute to no
-    cell, matching a pandas pivot's dropped-NaN columns.
-    ``row_total`` appends Superset's row-total ``count`` column as a
-    REAL ``count(*)`` in the same aggregate — NOT the sum of the
-    count cells, which silently under-counts whenever the pivot key
-    has NULLs or values outside the pinned ``values`` list."""
+    """Compile a Superset pivot_table_v2 chart against its dataset
+    DataFrame: :func:`pivot_form_data_to_sql` run over ``df``.
+    ``values`` pins the output schema explicitly; else it is derived
+    from the chart's filtered rows, sorted (:func:`_pivot_values`)."""
     form_data = merge_extra_form_data(form_data)
-    df = _apply_time_range(df, form_data)
-    df = _apply_adhoc_filters(df, form_data)
-    rows, col_key, metrics = _pivot_fields(form_data)
-    vals = list(values) if values is not None \
-        else _pivot_values(df, col_key)
-    aggs = [
-        _pivot_cell_column(m, col_key, v).alias(_pivot_label(v, m))
-        for v in vals for m in metrics
-    ]
-    if row_total:
-        aggs.append(F.count(F.lit(1)).alias("count"))
-    return df.groupBy(*rows).agg(*aggs)
+    if values is None:
+        _, col_key, _ = _pivot_fields(form_data)
+        conds = _where_conds(form_data)
+        values = _pivot_values(
+            df.where(" AND ".join(conds)) if conds else df, col_key)
+    return _on_temp_view(df, lambda view: pivot_form_data_to_sql(
+        view, form_data, values, row_total))
 
 
 def pivot_form_data_to_sql(
     table: str, form_data: Mapping[str, Any], values: Sequence[Any],
     row_total: bool = False,
 ) -> str:
-    """The SQL-text twin of :func:`compile_pivot_form_data`.
-    ``values`` is required: SQL compilation has no data access, and
-    the pivoted schema must be stated, not guessed."""
+    """A Superset pivot_table_v2 chart -> SQL text over ``table``:
+    ``groupbyRows`` stay group keys, the single ``groupbyColumns`` key
+    fans out into one output column per (value, metric) via
+    conditional aggregation. Superset itself pivots the fetched frame
+    in pandas; compiling the pivot INTO the aggregate pushes it to the
+    engine — one shuffle on the row keys, cells as FILTER-style
+    aggregates, no second pass. Rows whose pivot key is NULL
+    contribute to no cell, matching a pandas pivot's dropped-NaN
+    columns. ``values`` is required: SQL compilation has no data
+    access, and the pivoted schema must be stated, not guessed.
+    ``row_total`` appends Superset's row-total ``count`` column as a
+    REAL ``count(*)`` in the same aggregate — NOT the sum of the
+    count cells, which silently under-counts whenever the pivot key
+    has NULLs or values outside the pinned ``values`` list."""
     form_data = merge_extra_form_data(form_data)
     rows, col_key, metrics = _pivot_fields(form_data)
     ck = _sql_ident(col_key)
@@ -1731,8 +1335,7 @@ def pivot_form_data_to_sql(
     if row_total:
         cells.append("count(*) AS count")
     row_idents = [_sql_ident(r) for r in rows]
-    where_conds = _time_range_sql_conds(form_data) \
-        + _adhoc_filter_sql(form_data)
+    where_conds = _where_conds(form_data)
     where = (" WHERE " + " AND ".join(where_conds)
              if where_conds else "")
     return (

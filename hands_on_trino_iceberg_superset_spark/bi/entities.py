@@ -1,13 +1,15 @@
 """BI metadata entities (SURVEY.md §2.6 M3-M6).
 
-Restates the reference's Superset bootstrap objects
-(``/root/reference/compose/superset/init_db.py``) without the Superset
-runtime: ``Database`` is the named engine connection (init_db.py:8-18),
+Restates the reference's Superset bootstrap objects (its
+``compose/superset/init_db.py``) without the Superset runtime:
+``Database`` is the named engine connection (init_db.py:8-18),
 ``Dataset`` the ``SqlaTable`` (init_db.py:29-35,73-88) with live column
 introspection, ``Chart`` the ``Slice`` storing form_data
 (init_db.py:102-175), ``Dashboard`` the position-JSON grid composition
 (init_db.py:208-329). Only ``Chart.run()`` has query semantics — it
-delegates to :func:`compile_form_data`.
+compiles the form_data to SQL text (:func:`form_data_to_sql`, what
+Superset sends over the wire) and runs it over the dataset's frame
+through :func:`compile_form_data`.
 """
 
 from __future__ import annotations
@@ -90,9 +92,9 @@ class Dataset:
 
 @dataclass
 class Chart:
-    """``Slice``: a name + viz_type + form_data blob; compiled to a
-    DataFrame on demand (the reference compiles to SQL at view time,
-    §3.2 step 3)."""
+    """``Slice``: a name + viz_type + form_data blob; compiled to SQL
+    text and run as a DataFrame on demand (the reference compiles to
+    SQL at view time, §3.2 step 3)."""
 
     name: str
     dataset: Dataset

@@ -1,6 +1,7 @@
 """BI-layer query-inventory entries (SURVEY.md §2.6).
 
-Each entry runs a Superset-shaped chart — form_data compiled by
+Each entry runs a Superset-shaped chart — form_data compiled to SQL
+text by ``bi.compiler.form_data_to_sql`` and run over a DataFrame by
 ``bi.compiler.compile_form_data`` — over the deterministic seed frames
 (seed.sh:72-115 with fixed ``as_of``), so the oracle regenerates the
 same tables via ``SEED_CTE`` and states the SQL the reference's
@@ -104,10 +105,10 @@ def bi_chart_agg_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(M1/M2 introspection resolves the view like any table), a "
         "bi.Dataset(sql=...) virtual dataset selects FROM the view, "
         "and the chart's form_data compiles over the dataset frame "
-        "— the full Superset virtual-dataset chain, Catalyst path; "
-        "the SQL-text path over the same view is parity-tested in "
-        "tests/test_bi.py. Catalyst dissolves the view + virtual "
-        "layers into one plan (temp-view substitution happens at "
+        "— the full Superset virtual-dataset chain (tests/test_bi.py "
+        "runs the same SQL text over the engine view). Catalyst "
+        "dissolves the view + virtual layers into one plan "
+        "(temp-view substitution happens at "
         "analysis) — the layering costs nothing at execution.",
 )
 def bi_chart_virtual_dataset(spark: SparkSession,
@@ -180,8 +181,7 @@ def bi_chart_virtual_dataset(spark: SparkSession,
         "day-sparse, so real gaps materialize. Every resample stage "
         "runs over the already-aggregated chart-sized result — the "
         "events_daily_gapfill machinery reached from a Superset "
-        "form_data blob, identical on both compilation paths "
-        "(parity-tested).",
+        "form_data blob.",
 )
 def bi_chart_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hands_on_trino_iceberg_superset_spark.sources import load_table
@@ -313,10 +313,10 @@ def bi_chart_timeseries_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "field every reference chart carries empty (init_db.py:152) "
         "that a real Superset user fills: each listed metric also "
         "emits its share of the RESULT total (pct_<label>). Scale "
-        "shape: the denominator is one scalar per metric, computed "
-        "as a broadcast cross-join of a 1-row aggregate — never a "
-        "global single-partition window. The oracle restates the "
-        "same chart in SQL (count-based percent: integer totals, so "
+        "shape: the denominator is one window sum per metric over "
+        "the already-aggregated, row-limited result — chart-sized, "
+        "never the fact table. The oracle restates the same chart "
+        "in SQL (count-based percent: integer totals, so "
         "the double division is bit-identical on both engines).",
 )
 def bi_chart_percent_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -350,9 +350,9 @@ def bi_chart_percent_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Aggregate chart with SIMPLE adhoc_filters — the Superset "
         "filter-bar field (IN + >= here), compiled to pre-aggregate "
-        "predicates on both paths: Catalyst Column filters natively, "
-        "and SQL text with quote-doubled literals so a stored blob "
-        "can never break out of the WHERE (SQL-expressionType "
+        "predicates in SQL text with quote-doubled literals so a "
+        "stored blob can never break out of the WHERE "
+        "(SQL-expressionType "
         "filters are refused outright as an injection channel — "
         "gated in tests/test_bi.py). The oracle restates the "
         "filtered aggregate from the regenerated seed.",
@@ -402,11 +402,10 @@ def bi_chart_adhoc_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Aggregate chart with a HAVING-clause adhoc filter — "
         "Superset's metric filter: groups whose count falls below "
         "the threshold are dropped POST-aggregation, before "
-        "ordering/limit/percent. Compiled as a post-agg predicate on "
-        "the Catalyst path and a HAVING clause stating the aggregate "
-        "EXPRESSION (alias-free, engine-portable) on the SQL path; "
-        "path parity + refusal gates in tests/test_bi.py. The oracle "
-        "restates the filtered aggregate from the regenerated seed.",
+        "ordering/limit/percent. Compiled as a HAVING clause stating "
+        "the aggregate EXPRESSION (alias-free, engine-portable); "
+        "refusal gates in tests/test_bi.py. The oracle restates the "
+        "filtered aggregate from the regenerated seed.",
 )
 def bi_chart_having_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     tx = seed_frames(spark)["transactions"].withColumn(
@@ -458,8 +457,8 @@ def bi_chart_having_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(rolling_type=mean, rolling_periods=7 — Superset applies "
         "this as pandas rolling() on the fetched frame; the compiler "
         "restates it as a 7-row window per series, so it runs "
-        "engine-side on both compilation paths). Each metric label "
-        "is REPLACED by its rolled value; rows with fewer than "
+        "engine-side). Each metric label is REPLACED by its "
+        "rolled value; rows with fewer than "
         "min_periods (pandas default = window size) observations "
         "are NULL, exactly pandas' leading-edge behavior. Counts "
         "are exact integers, so the mean division is bit-identical "
@@ -511,9 +510,8 @@ def bi_chart_rolling_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         "series, never a row_limit on buckets): an independent "
         "top-groups subquery over the same filtered frame "
         "(deterministic metric-then-key ordering) semi-joins the "
-        "main aggregate, exactly Superset's two-query shape, on "
-        "BOTH compilation paths. Scale: the series subquery "
-        "aggregates to the series grid and broadcasts back. Oracle "
+        "main aggregate, exactly Superset's two-query shape. Scale: "
+        "the series subquery aggregates to the series grid. Oracle "
         "restates the two-query shape in SQL.",
 )
 def bi_chart_series_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -566,10 +564,9 @@ def bi_chart_series_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "4.1.4): the same aggregate re-run with buckets shifted "
         "forward one week, left-joined on (__timestamp, series) so "
         "last week's count lands beside this week's as "
-        "count__1_week_ago — on BOTH compilation paths "
-        "(bi/compiler.py compile_form_data + form_data_to_sql, "
-        "parity-tested). Scale: both sides aggregate to chart-sized "
-        "series grids before the join; the fact table is scanned "
+        "count__1_week_ago (bi/compiler.py form_data_to_sql). "
+        "Scale: both sides aggregate to chart-sized series grids "
+        "before the join; the fact table is scanned "
         "twice linearly, never joined row-to-row. Oracle restates "
         "the self-join in SQL.",
 )
@@ -617,9 +614,9 @@ def bi_chart_time_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
         "contribution toggle (each series' share of its time "
         "bucket): metric values replaced by value / sum over the "
         "bucket, a window over the already-aggregated chart-sized "
-        "result on BOTH compilation paths (parity-tested; series "
-        "mode shares the code path). Count metrics divide as exact "
-        "integers in f64, so both engines agree bit-for-bit. Runs "
+        "result (series mode shares the code path). Count metrics "
+        "divide as exact integers in f64, so both engines agree "
+        "bit-for-bit. Runs "
         "on the regenerated seed transactions (seed.sh:112-115, "
         "reserved-word column 'timestamp'); the oracle restates the "
         "bucket-share window in SQL.",
@@ -955,31 +952,25 @@ def bi_chart_dedup_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Superset RELATIVE time range ('Last week' — the picker "
         "default a real user clicks first; init_db.py:147 carries "
-        "time_range on every reference chart) through BOTH compiler "
-        "paths: the phrase resolves against the injectable "
+        "time_range on every reference chart) through the form-data "
+        "compiler: the phrase resolves against the injectable "
         "time_range_anchor (the seeder's as_of pattern — wall clock "
         "when absent, pinned here so the oracle can restate the "
         "bounds) to [anchor-midnight - 7 days, anchor-midnight) with "
-        "SIP-15 [inclusive, exclusive) endpoints. The row UNION "
-        "DISTINCTs the Catalyst compilation with the SQL-text "
-        "compilation executed over the same view — if the two paths "
-        "ever disagree on the resolved bounds, the union grows extra "
-        "rows and the oracle hash-check fails. The oracle derives "
-        "the same window by its own date arithmetic (anchor - "
-        "INTERVAL 7 DAY), not by copying resolved literals.",
+        "SIP-15 [inclusive, exclusive) endpoints, emitted as "
+        "TIMESTAMP literals in the chart's SQL text. The oracle "
+        "derives the same window by its own date arithmetic (anchor "
+        "- INTERVAL 7 DAY), not by copying resolved literals, so a "
+        "wrong resolution fails the hash gate.",
 )
 def bi_chart_time_range_relative(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
-    from hands_on_trino_iceberg_superset_spark.bi.compiler import (
-        form_data_to_sql,
-    )
     from hands_on_trino_iceberg_superset_spark.sources import load_table
 
     ev = (
         load_table(spark, sf_dir, "events")
         .select("ts", "event_type", dec("value").alias("value_dec"))
     )
-    ev.createOrReplaceTempView("bi_relative_events_v")
     fdata = {
         "viz_type": "table",
         "query_mode": "aggregate",
@@ -994,15 +985,8 @@ def bi_chart_time_range_relative(spark: SparkSession,
         ],
         "order_by": [["count", False], ["event_type", True]],
     }
-    cols = ["event_type", "count", "sum_value"]
-    catalyst = compile_form_data(ev, fdata).select(*cols)
-    via_sql = spark.sql(
-        form_data_to_sql("bi_relative_events_v", fdata)
-    ).select(*cols)
-    return (
-        catalyst.unionAll(via_sql).distinct()
-        .withColumn("sum_value", dbl(F.col("sum_value")))
-    )
+    return compile_form_data(ev, fdata).withColumn(
+        "sum_value", dbl(F.col("sum_value")))
 
 
 def _hybrid_chart_oracle() -> str:
@@ -1132,25 +1116,18 @@ def bi_chart_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "r12 compiler refused: the main arm covers the resolved "
         "window [anchor-7d, anchor) and each offset arm reads its "
         "SHIFTED window [anchor-14d, anchor-7d) from the pre-range "
-        "frame (Superset's shifted-range fetch; r13, both compiler "
-        "paths), so every main bucket — including the window's "
-        "first — finds its week-ago value instead of NULL. The row "
-        "UNION DISTINCTs the Catalyst compilation with the SQL-text "
-        "compilation executed over the same view: a path divergence "
-        "grows extra rows and fails the hash gate. The oracle "
-        "derives both windows by its own date arithmetic from the "
-        "pinned anchor. Scale: two chart-sized aggregates, two "
-        "linear scans, never a row-to-row join.",
+        "frame (Superset's shifted-range fetch, r13), so every main "
+        "bucket — including the window's first — finds its "
+        "week-ago value instead of NULL. The oracle derives both "
+        "windows by its own date arithmetic from the pinned anchor. "
+        "Scale: two chart-sized aggregates, two linear scans, never "
+        "a row-to-row join.",
 )
 def bi_chart_time_compare_windowed(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
-    from hands_on_trino_iceberg_superset_spark.bi.compiler import (
-        form_data_to_sql,
-    )
     from hands_on_trino_iceberg_superset_spark.sources import load_table
 
     ev = load_table(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("bi_tc_windowed_events_v")
     fdata = {
         "viz_type": "echarts_timeseries_line",
         "query_mode": "aggregate",
@@ -1162,19 +1139,10 @@ def bi_chart_time_compare_windowed(spark: SparkSession,
         "time_range": "Last week",
         "time_range_anchor": "2024-01-29 00:00:00",
     }
-
-    def shape(out: DataFrame) -> DataFrame:
-        return out.select(
-            F.col("__timestamp").cast("string").alias("__timestamp"),
-            "event_type", "count", "count__1_week_ago",
-        )
-
-    catalyst = shape(compile_form_data(ev, fdata))
-    via_sql = shape(spark.sql(
-        form_data_to_sql("bi_tc_windowed_events_v", fdata)
-    ))
-    return (catalyst.unionAll(via_sql).distinct()
-            .orderBy("__timestamp", "event_type"))
+    return compile_form_data(ev, fdata).select(
+        F.col("__timestamp").cast("string").alias("__timestamp"),
+        "event_type", "count", "count__1_week_ago",
+    ).orderBy("__timestamp", "event_type")
 
 
 @register(
@@ -1286,8 +1254,8 @@ def bi_chart_asof_attribution(spark: SparkSession,
     GROUP BY event_type
     ORDER BY count DESC, event_type
     """,
-    doc="SIP-68 dashboard NATIVE FILTERS through both compiler "
-        "paths (VERDICT r13 top item): the filter bar on a Superset "
+    doc="SIP-68 dashboard NATIVE FILTERS through the form-data "
+        "compiler (VERDICT r13 top item): the filter bar on a Superset "
         ">=1.5 dashboard (where the reference's own dashboard "
         "attaches, init_db.py:208-329) delivers the user's "
         "selections to every chart as extra_form_data — "
@@ -1297,18 +1265,13 @@ def bi_chart_asof_attribution(spark: SparkSession,
         "anchor). Before r14 the key was silently dropped: the one "
         "silent-wrong-answer hazard left (unfiltered rows, no "
         "error); unmodeled sub-keys now refuse loudly instead "
-        "(bi/compiler.merge_extra_form_data). The row UNION "
-        "DISTINCTs the Catalyst compilation with the SQL-text "
-        "compilation — a merge divergence between paths grows rows "
-        "and fails the hash gate. The oracle restates the merged "
-        "WHERE (own filter AND both native filters AND the "
-        "overridden window) by its own date arithmetic.",
+        "(bi/compiler.merge_extra_form_data). The oracle restates "
+        "the merged WHERE (own filter AND both native filters AND "
+        "the overridden window) by its own date arithmetic, so a "
+        "dropped or mis-merged filter fails the hash gate.",
 )
 def bi_chart_native_filter(spark: SparkSession,
                            sf_dir: str) -> DataFrame:
-    from hands_on_trino_iceberg_superset_spark.bi.compiler import (
-        form_data_to_sql,
-    )
     from hands_on_trino_iceberg_superset_spark.sources import load_table
 
     ev = (
@@ -1316,7 +1279,6 @@ def bi_chart_native_filter(spark: SparkSession,
         .select("ts", "event_type", "user_id",
                 dec("value").alias("value_dec"))
     )
-    ev.createOrReplaceTempView("bi_native_events_v")
     fdata = {
         "viz_type": "table",
         "query_mode": "aggregate",
@@ -1341,15 +1303,8 @@ def bi_chart_native_filter(spark: SparkSession,
             "time_range": "Last week",
         },
     }
-    cols = ["event_type", "count", "sum_value"]
-    catalyst = compile_form_data(ev, fdata).select(*cols)
-    via_sql = spark.sql(
-        form_data_to_sql("bi_native_events_v", fdata)
-    ).select(*cols)
-    return (
-        catalyst.unionAll(via_sql).distinct()
-        .withColumn("sum_value", dbl(F.col("sum_value")))
-    )
+    return compile_form_data(ev, fdata).withColumn(
+        "sum_value", dbl(F.col("sum_value")))
 
 
 @register(
@@ -1384,21 +1339,17 @@ def bi_chart_native_filter(spark: SparkSession,
         "relative time_range delivered BY the native channel "
         "(extra_form_data.time_range override) over a VIRTUAL "
         "dataset — the exact interaction the r13 verdict flagged: "
-        "each time_compare offset arm re-reads the pre-range frame "
-        "(bi/compiler.py compile_form_data), so a native filter "
+        "each time_compare offset arm re-reads the unwindowed rows "
+        "(bi/compiler.py form_data_to_sql), so a native filter "
         "merged after that point would compare filtered current "
         "buckets against UNFILTERED history; merging at entry makes "
-        "both arms see it. Both compiler paths UNION DISTINCTed; "
-        "the oracle derives both shifted windows and the filter by "
-        "its own arithmetic. Scale: two chart-sized aggregates over "
-        "one filtered linear scan each, joined on day buckets — "
-        "never a row-to-row join.",
+        "both arms see it. The oracle derives both shifted windows "
+        "and the filter by its own arithmetic. Scale: two "
+        "chart-sized aggregates over one filtered linear scan each, "
+        "joined on day buckets — never a row-to-row join.",
 )
 def bi_chart_native_compare(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
-    from hands_on_trino_iceberg_superset_spark.bi.compiler import (
-        form_data_to_sql,
-    )
     from hands_on_trino_iceberg_superset_spark.bi.entities import (
         Database,
     )
@@ -1430,19 +1381,10 @@ def bi_chart_native_compare(spark: SparkSession,
             "time_range": "Last week",
         },
     }
-
-    def shape(out: DataFrame) -> DataFrame:
-        return out.select(
-            F.col("__timestamp").cast("string").alias("__timestamp"),
-            "count", "count__1_week_ago",
-        )
-
-    catalyst = shape(compile_form_data(ds.df(), fdata))
-    via_sql = shape(spark.sql(
-        form_data_to_sql("v_native_cmp", fdata)
-    ))
-    return (catalyst.unionAll(via_sql).distinct()
-            .orderBy("__timestamp"))
+    return compile_form_data(ds.df(), fdata).select(
+        F.col("__timestamp").cast("string").alias("__timestamp"),
+        "count", "count__1_week_ago",
+    ).orderBy("__timestamp")
 
 
 def _quality_chart_oracle() -> str:

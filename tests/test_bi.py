@@ -106,6 +106,14 @@ def test_raw_mode_ignores_metric_order_by(spark):
         "order_by": [["id", False]], "row_limit": 1,
     })
     assert out2.collect()[0].id == 2
+    # no all_columns: every column of the frame, and an order_by on a
+    # real column applies while one on a missing column is dropped
+    out3 = compile_form_data(df, {
+        "query_mode": "raw",
+        "order_by": [["ghost", True], ["id", False]],
+    })
+    assert out3.columns == ["id", "s"]
+    assert [tuple(r) for r in out3.collect()] == [(2, "b"), (1, "a")]
 
 
 def test_relative_time_range_resolves_and_unmodeled_raises(spark):
@@ -1443,3 +1451,44 @@ def test_stream_sessions_chart_both_paths(spark, sf_dir):
                                           fd)))
     assert native == wire
     assert len(native) == 5
+
+
+def test_adapters_leave_no_temp_view_behind(spark):
+    """compile_form_data / compile_pivot_form_data bind the frame to a
+    temp view only while compiling: the catalog is unchanged after
+    each call (also when compilation refuses), and the returned frame
+    still collects once the view is gone."""
+    import pytest
+
+    from hands_on_trino_iceberg_superset_spark.bi.compiler import (
+        compile_pivot_form_data,
+    )
+
+    def catalog():
+        return sorted((t.name, t.isTemporary)
+                      for t in spark.catalog.listTables())
+
+    df = spark.createDataFrame(
+        [("a", "x", 1.0), ("a", "y", 2.0), ("b", "x", 4.0)],
+        "r string, c string, v double",
+    )
+    before = catalog()
+    agg = compile_form_data(df, {
+        "query_mode": "aggregate", "groupby": ["r"],
+        "metrics": [{"aggregate": "SUM", "column": "v", "label": "sv"}],
+        "order_by": [["r", True]],
+    })
+    pivot_fd = {"groupbyRows": ["r"], "groupbyColumns": ["c"],
+                "metrics": ["count"]}
+    derived = compile_pivot_form_data(df, pivot_fd)
+    pinned = compile_pivot_form_data(df, pivot_fd, values=["x"],
+                                     row_total=True)
+    with pytest.raises(ValueError):
+        compile_form_data(df, {"query_mode": "bogus"})
+    assert catalog() == before
+    assert [tuple(r) for r in agg.collect()] == [("a", 3.0), ("b", 4.0)]
+    assert sorted(tuple(r) for r in derived.collect()) == [
+        ("a", 1, 1), ("b", 1, 0)]
+    assert sorted(tuple(r) for r in pinned.collect()) == [
+        ("a", 1, 2), ("b", 1, 1)]
+    assert catalog() == before
